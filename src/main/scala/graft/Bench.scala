@@ -1,4 +1,6 @@
 package graft
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -8,7 +10,7 @@ object Bench {
     // doesn't say which is which poisons the cross-run medians — the r17
     // scaling block was uninterpretable partly because core count had to
     // be guessed from calibration speed (VERDICT r17 §scaling)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.cpus.toString
     val spark = Engine.session("graft-bench")
     // warm up JVM/codegen/file-index paths so per-query timings measure the
     // queries, not first-touch JIT + parquet footer reads. A table that
@@ -61,10 +63,22 @@ object Bench {
       ("shared:bigram_model",
         Set("text_lm_bigram", "pipeline_ppl_buckets"),
         () => graft.operators.TextQueries.warmBigramModel(spark, sfDir)))
+    // per-key cost record (jobs, stages, tasks, Catalyst phases, shuffle,
+    // spill, GC; build vs execute for queries) of every timed run, one
+    // record per pass, written to the full record only. Each key's timer
+    // runs INSIDE its telemetry block, so the listener-bus drains that
+    // open and close the block stay outside the timer.
+    val telemetry = QueryTelemetry.attach(spark)
+    val records = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+    def withRecord[A](key: String)(body: => A): A = {
+      val r = telemetry.tagged(key)(body)
+      records(key) = records.getOrElse(key, Vector.empty) :+ telemetry.take(key).json
+      r
+    }
     val sharedTimed: Seq[(String, Either[String, Double])] = sharedStages.flatMap {
       case (key, consumers, warm) =>
         if (!selected.exists(kv => consumers(kv._1))) None
-        else {
+        else withRecord(key) {
           val t0 = System.nanoTime()
           try { warm(); Some((key, Right((System.nanoTime() - t0) / 1e9))) }
           catch { case e: Throwable =>
@@ -72,11 +86,11 @@ object Bench {
           }
         }
     }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Double, Option[String]) = withRecord(name) {
       val t0 = System.nanoTime()
       val err =
-        try { fn(spark, sfDir).count(); None }
+        try { telemetry.timed(name)(fn(spark, sfDir))(_.count()); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}") }
       ((System.nanoTime() - t0) / 1e9, err)
@@ -87,7 +101,7 @@ object Bench {
     // (minutes) between a query's two samples, decorrelating the noise. A
     // query that fails in pass 1 is a FAILURE and is not retried — the
     // bench must not flatter a flaky regression.
-    val pass1 = selected.map { case (name, fn) => (name, once(fn)) }
+    val pass1 = selected.map { case (name, fn) => (name, once(name, fn)) }
     // (name, min-across-passes, per-pass samples, error). BOTH passes'
     // timings are kept for the bench_full.json artifact: min-of-2 alone
     // hid a bimodal plan for a whole round (an AQE-strategy-dependent
@@ -97,7 +111,7 @@ object Bench {
     val results = selected.zip(pass1).map { case ((name, fn), (_, r1)) =>
       if (r1._2.isDefined) (name, r1._1, Seq(r1._1), r1._2)
       else {
-        val r2 = once(fn)
+        val r2 = once(name, fn)
         if (r2._2.isEmpty) (name, math.min(r1._1, r2._1), Seq(r1._1, r2._1), None)
         // pass 1 green, pass 2 failed = a FLAKY failure and must be
         // recorded as one — reporting the lucky pass would flatter
@@ -150,7 +164,9 @@ object Bench {
       jstr(k) + ":[" + ps.mkString(",") + "]" } ++
       sharedOk.map { case (k, v) => jstr(k) + ":[" + v + "]" })
       .mkString("{", ",", "}")
-    val fullLine = line.stripSuffix("}") + s""","passes":$passes}"""
+    val telemetryJson = records.map { case (k, rs) => jstr(k) + rs.mkString(":[", ",", "]") }
+      .mkString("{", ",", "}")
+    val fullLine = line.stripSuffix("}") + s""","passes":$passes,"telemetry":$telemetryJson}"""
     try {
       val out = java.nio.file.Paths.get("target", "bench_full.json")
       java.nio.file.Files.createDirectories(out.getParent)
@@ -191,29 +207,21 @@ object Bench {
       // runs + an sf1 decade run), and blending them would make the
       // summary's per-query "min" always the smallest fixture's number
       // while the file labels itself with one sf
-      val sfTag = s""""sf":${jstr(sfDir)}"""
       // ... and at THIS run's core count: the driver's scaling pass runs
       // the same round at 8 cores, and blending those archives into the
       // 32-core medians shifted every per-query number. Legacy archives
       // (no "cpus" key — written before r18) are excluded the same way:
       // their core count is unknowable, which is exactly the defect.
-      val cpuTag = s""""cpus":${jstr(cpus)}"""
-      val runFiles = Option(dir.toFile.listFiles).getOrElse(Array.empty)
+      // Both tags are read as top-level keys of the parsed record, never
+      // matched as substrings: a query name or error text can contain them.
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val runs = Option(dir.toFile.listFiles).getOrElse(Array.empty)
         .filter(f => runRe.findFirstIn(f.getName).isDefined).sortBy(_.getName)
-        .filter { f =>
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          txt.contains(sfTag) && txt.contains(cpuTag)
-        }
-      val qRe = """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r
-      val perRun: Seq[Map[String, Double]] = runFiles.toSeq.map { f =>
-        val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val start = txt.indexOf("\"queries\":{")
-        if (start < 0) Map.empty[String, Double]
-        else {
-          val body = txt.substring(start + 11, txt.indexOf("}", start))
-          qRe.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
+        .flatMap(f => scala.util.Try(json.readTree(f)).toOption)
+        .filter(r => r.path("sf").asText == sfDir && r.path("cpus").asText == cpus)
+      val perRun: Seq[Map[String, Double]] = runs.toSeq.map { r =>
+        val qs = r.path("queries")
+        qs.properties.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
       }
       val allKeys = perRun.flatMap(_.keys).distinct.sorted
       def med(xs: Seq[Double]): Double = {
@@ -231,7 +239,7 @@ object Bench {
         else f"bench_round_r$round%02d_summary_cpus$cpus.json"
       java.nio.file.Files.write(
         dir.resolve(sumName),
-        (s"""{"round":$round,"runs":${runFiles.length},"sf":${jstr(sfDir)},""" +
+        (s"""{"round":$round,"runs":${runs.length},"sf":${jstr(sfDir)},""" +
           s""""cpus":${jstr(cpus)},"queries":$summary}""" + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     graft.operators.DedupQueries.evictSharedPairs(spark)

@@ -144,43 +144,22 @@ object ScaleProbe {
 
     val only: Option[Set[String]] = args.lift(3).map(_.split(",").map(_.trim).toSet)
     // per-probe spill accounting (the spill-regime evidence a
-    // constrained-heap campaign needs): task metrics accumulated by a
-    // listener, snapshotted around each probe. Listener delivery is
-    // async with no public flush, so the post-probe snapshot waits a
-    // beat — totals are within one straggler task of exact, which is
-    // fine for MB-scale evidence.
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    val peakExecMem = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled): Unit
-          spillDisk.addAndGet(m.diskBytesSpilled): Unit
-          peakExecMem.updateAndGet(p => math.max(p, m.peakExecutionMemory)): Unit
-        }
-      }
-    })
+    // constrained-heap campaign needs) from the probe's telemetry record
+    val telemetry = QueryTelemetry.attach(spark)
     def time(label: String)(body: => Long): Unit =
       if (only.forall(_.contains(label))) {
-        // drain the async listener bus before snapshotting, so straggler
-        // task-end events from the PREVIOUS probe are counted there and
-        // not attributed to this one (a fixed sleep left ~one task of slop)
-        org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-        val (m0, d0) = (spillMem.get, spillDisk.get)
-        peakExecMem.set(0)
-        val t0 = System.nanoTime()
-        val (rows, err) =
-          try (body, None)
-          catch { case e: Throwable =>
-            (-1L, Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")) }
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-        val spill = s""","spillMemMB":${(spillMem.get - m0) / 1048576}""" +
-          s""","spillDiskMB":${(spillDisk.get - d0) / 1048576}""" +
-          s""","peakTaskMemMB":${peakExecMem.get / 1048576}"""
+        val (sec, rows, err) = telemetry.tagged(label) {
+          val t0 = System.nanoTime()
+          val (rows, err) =
+            try (body, None)
+            catch { case e: Throwable =>
+              (-1L, Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")) }
+          ((System.nanoTime() - t0) / 1e9, rows, err)
+        }
+        val r = telemetry.take(label)
+        val spill = s""","spillMemMB":${r.spillMemory / 1048576}""" +
+          s""","spillDiskMB":${r.spillDisk / 1048576}""" +
+          s""","peakTaskMemMB":${r.peakTaskMemory / 1048576}"""
         val errS = err.map(m => s""","error":"${m.replaceAll("[\"\\\\\\x00-\\x1f]", " ")}"""").getOrElse("")
         println(f"""{"probe":"$label","sec":$sec%.2f,"rows":$rows$spill$errS}""")
       }

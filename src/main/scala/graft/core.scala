@@ -95,16 +95,17 @@ object Tables {
   * value, which `adaptive.enabled` already turns on).
   */
 object Engine {
+  /** Local core count of every session: the master is local[cpus] and
+    * shuffle.partitions is cpus. The default is the 32-core deployment
+    * host; SPARK_GRAFT_CPUS overrides it for smaller dev machines. */
+  val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   def session(appName: String = "graft"): SparkSession = {
-    // default matches the driver environment (local[32], 32 shuffle
-    // partitions per the build brief); SPARK_GRAFT_CPUS overrides for
-    // smaller dev machines
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .appName(appName)
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // cost-based optimization consumes ANALYZE-collected statistics

@@ -3895,21 +3895,23 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * a misestimated-but-large output keeps the parallel write (coalesce
     * collapses only the stage below the nearest exchange, so an
     * aggregate/join snapshot keeps its parallel upstream either way). */
-  private def writeSnapshot(df: DataFrame, mode: String, dir: String): Unit = {
-    // The byte estimate costs strings at a fixed ~20 B, so a snapshot of
-    // many rows × wide TEXT cells can land under the byte gate while the
-    // real output is hundreds of MB — a serial-write straggler. When the
-    // optimizer KNOWS the row count (VALUES inserts, CBO-analyzed
-    // sources), cap the single-file branch at 100k rows; unknown row
-    // counts keep the byte gate alone (parquet-scan-backed snapshots,
-    // whose file-byte estimate is not string-blind).
-    val small =
-      try {
-        val st = df.queryExecution.optimizedPlan.stats
-        st.sizeInBytes <= BigInt(8L << 20) && st.rowCount.forall(_ <= 100000L)
-      } catch { case _: Throwable => false }
-    (if (small) df.coalesce(1) else df).write.mode(mode).parquet(dir)
-  }
+  private def writeSnapshot(df: DataFrame, mode: String, dir: String): Unit =
+    (if (estimatedSmall(df)) df.coalesce(1) else df).write.mode(mode).parquet(dir)
+
+  /** The optimizer-estimated size of `df` is batch-like: at most 8 MiB
+    * and, when the row count is known, at most 100k rows. The byte
+    * estimate costs strings at a fixed ~20 B, so many rows × wide TEXT
+    * cells can land under the byte gate while the real output is
+    * hundreds of MB; a KNOWN row count (VALUES inserts, CBO-analyzed
+    * sources) caps that, and unknown counts keep the byte gate alone
+    * (parquet-scan-backed frames, whose file-byte estimate is not
+    * string-blind). Estimation failures answer false. Gates both the
+    * single-file snapshot write and DML fusion. */
+  private def estimatedSmall(df: DataFrame): Boolean =
+    try {
+      val st = df.queryExecution.optimizedPlan.stats
+      st.sizeInBytes <= BigInt(8L << 20) && st.rowCount.forall(_ <= 100000L)
+    } catch { case _: Throwable => false }
 
   // ------------------------------------------- observe-fused DML writes
   //
@@ -3935,19 +3937,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
 
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Fusion gate: the optimizer-estimated size of `df` is batch-like —
-    * under the snapshot single-file threshold AND (when the row count is
-    * known) bounded in rows, so driver-merged metrics stay trivially
-    * small. Estimation failures disable fusion, never enable it.
-    * [[GraftSession.fusionEnabled]] is the test seam that forces every
-    * statement down the classic path, so the equivalence spec can pin
-    * fused == classic on identical scripts. */
+  /** Fusion gate: [[estimatedSmall]], so the merged observed metrics
+    * stay trivially small. [[GraftSession.fusionEnabled]] is the test seam
+    * that forces every statement down the classic path, so the
+    * equivalence spec can pin fused == classic on identical scripts. */
   private def smallForFusion(df: DataFrame): Boolean =
-    GraftSession.fusionEnabled && (
-      try {
-        val st = df.queryExecution.optimizedPlan.stats
-        st.sizeInBytes <= BigInt(8L << 20) && st.rowCount.forall(_ <= 100000L)
-      } catch { case _: Throwable => false })
+    GraftSession.fusionEnabled && estimatedSmall(df)
 
   /** Write `frame` (projected to the table's columns, optionally after
     * `keepFilter`) to `dir` while computing `aggs` over the PRE-filter
@@ -4026,8 +4021,9 @@ object GraftSession {
 
   /** (session identity, catalog identity, catalog generation, data
     * generation) of the last full table/view registration — see
-    * registerAll. */
-  private[sqlfront] val lastRegistrar =
+    * registerAll. Unset by anything that re-points a registered temp view
+    * behind registerAll's back, so the next call really re-registers. */
+  private[graft] val lastRegistrar =
     new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long, Long)](null)
 
   /** Test seam: force every DML statement down the classic

@@ -204,6 +204,10 @@ object MatviewMaintenance {
     spark.readStream.schema(schema).parquet(dir.toString)
       .select(t.visibleColumns.map(c => org.apache.spark.sql.functions.col(c.name)): _*)
       .createOrReplaceTempView(t.name)
+    // the standing registrations no longer match the catalog: without
+    // this, a refresh that publishes nothing leaves the tag unchanged and
+    // the restore below returns early, keeping the streaming twin bound
+    GraftSession.lastRegistrar.set(null)
     try {
       val agg = spark.sql(PgRewrite.rewrite(v.sql))
       var writer = agg.writeStream.outputMode("complete")

@@ -2,10 +2,10 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Probe-tooling access to the (private[spark]) listener bus: block until
-  * all queued listener events have been delivered, so per-probe task-metric
-  * snapshots (graft.ScaleProbe) attribute straggler task events to the
-  * probe that ran them instead of the next one. Lives in an
+/** Telemetry access to the (private[spark]) listener bus: block until
+  * all queued listener events have been delivered, so per-key records
+  * (graft.QueryTelemetry) attribute straggler task and query events to
+  * the key that ran them instead of the next one. Lives in an
   * `org.apache.spark` subpackage purely for visibility — the TestUtils
   * pattern; dev-tooling only, never on a query path. */
 object ListenerBusDrain {
