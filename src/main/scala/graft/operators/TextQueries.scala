@@ -884,13 +884,6 @@ object TextQueries extends QueryPack {
   private[graft] def classifierTrainDocs(s: SparkSession, docs: DataFrame, iters: Int,
       driverGate: Long = DriverTrainGate): DataFrame = {
     import s.implicits._
-    val dbg = sys.env.contains("GRAFT_CLF_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[clf-probe] $label ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
     // label + feature bag folded into ONE row per doc: the (b, c) pairs
     // live in a bounded array (≤ model dimension + intercept = 65
     // entries), so every iteration's margin is row-local arithmetic.
@@ -940,7 +933,6 @@ object TextQueries extends QueryPack {
             (coalesce(try_element_at(col("st"), j + lit(2)), size(col("s")) + lit(1))
               - p).cast("long").as("c"))).as("f"))
       .persist()
-    mark("plan")
     // ONE narrow probe job decides the execution path: collect at most
     // gate+1 doc_ids (8 bytes each — a bounded ~800 KB even when the
     // corpus is past the gate, where the prefix is discarded; the limit
@@ -950,7 +942,6 @@ object TextQueries extends QueryPack {
     // below is a pure cache read.
     val probeIds = feats.select(col("doc_id"))
       .limit(driverGate.toInt + 1).collect().map(_.getLong(0))
-    mark("probe")
     var w: Map[Long, Long] = Map.empty
     if (probeIds.length <= driverGate) {
       // The probe saw the WHOLE corpus — enforce the merge invariant the
@@ -976,13 +967,11 @@ object TextQueries extends QueryPack {
         .select(col("f.b"), col("f.c"), col("y")).collect().map { r =>
           (r.getSeq[Long](0).toArray, r.getSeq[Long](1).toArray, r.getDouble(2))
         }
-      mark("bag-collect")
       // every doc carries exactly one intercept feature, so nDocs = row
       // count; the model's key set is the corpus' own bucket set (same
       // derivation as the distributed path's bucket-count job)
       val nDocs = local.length.toLong
       w = local.iterator.flatMap(_._1.iterator).map(_ -> 0L).toMap
-      mark("winit")
       for (_ <- 1 to iters) {
         val grad = scala.collection.mutable.LongMap.empty[Long]
         local.foreach { case (bs, cs, y) =>
@@ -997,7 +986,6 @@ object TextQueries extends QueryPack {
           }
         }
         w = stepWeights(w, b => grad.getOrElse(b, 0L), nDocs)
-        mark("iter")
       }
     } else {
       // Distributed path: the corpus is past the driver gate. ONE
@@ -1021,7 +1009,6 @@ object TextQueries extends QueryPack {
         if (parts < cachedParts) feats.coalesce(parts) else feats
       }
       w = bucketCounts.map(_.getLong(0) -> 0L).toMap
-      mark("winit")
       for (_ <- 1 to iters) {
         // model → ONE map-typed literal (the StreamingClassifier kernel):
         // margin and residual are a row-local pass — no join, no per-doc
@@ -1044,7 +1031,6 @@ object TextQueries extends QueryPack {
           .groupBy(col("x.b")).agg(sum(col("rq") * col("x.c")).as("g"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap // ≤65 rows
         w = stepWeights(w, b => grad.getOrElse(b, 0L), nDocs)
-        mark("iter")
       }
     }
     feats.unpersist()

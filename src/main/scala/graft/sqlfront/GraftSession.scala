@@ -1043,15 +1043,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         // close-paren that a [^)]* group cannot step over.
         val ts: Seq[String] =
           if (rest.startsWith("(")) {
-            var d = 0; var j = 0; var close = -1
-            while (j < rest.length && close < 0) {
-              rest.charAt(j) match {
-                case '(' => d += 1
-                case ')' => d -= 1; if (d == 0) close = j
-                case _ =>
-              }
-              j += 1
-            }
+            val close = new SqlLexer(rest).balancedClose(0)
             require(close > 0, s"cannot parse PREPARE type list: $stmt")
             val inner = rest.substring(1, close)
             rest = rest.substring(close + 1).trim
@@ -1078,26 +1070,15 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
             s"prepared statement \"$key\" does not exist"))
         val args = Option(argsS).map(topSplit(_).map(_.trim).filter(_.nonEmpty))
           .getOrElse(Seq.empty)
-        val out = new StringBuilder; var i = 0; var inS = false
-        while (i < body.length) {
-          val c = body.charAt(i)
-          if (inS) { out += c; if (c == '\'') inS = false; i += 1 }
-          else if (c == '\'') { inS = true; out += c; i += 1 }
-          else if (c == '$' && i + 1 < body.length && body.charAt(i + 1).isDigit) {
-            var j = i + 1
-            while (j < body.length && body.charAt(j).isDigit) j += 1
-            val n = body.substring(i + 1, j).toInt
-            require(n >= 1 && n <= args.length,
-              s"there is no parameter $$$n (EXECUTE got ${args.length} argument(s))")
-            // declared PG type → Spark type via TypeMap (TEXT, BIGSERIAL,
-            // DOUBLE PRECISION … are not Spark parser names)
-            val cast = types.lift(n - 1).filterNot(_.equalsIgnoreCase("unknown"))
-            out ++= cast.map(t => s"(CAST(${args(n - 1)} AS ${TypeMap.toSpark(t).sql}))")
-              .getOrElse(s"(${args(n - 1)})")
-            i = j
-          } else { out += c; i += 1 }
-        }
-        execOne(out.toString)
+        execOne(SqlLexer.bindPlaceholders(body) { n =>
+          require(n >= 1 && n <= args.length,
+            s"there is no parameter $$$n (EXECUTE got ${args.length} argument(s))")
+          // declared PG type → Spark type via TypeMap (TEXT, BIGSERIAL,
+          // DOUBLE PRECISION … are not Spark parser names)
+          val cast = types.lift(n - 1).filterNot(_.equalsIgnoreCase("unknown"))
+          cast.map(t => s"(CAST(${args(n - 1)} AS ${TypeMap.toSpark(t).sql}))")
+            .getOrElse(s"(${args(n - 1)})")
+        })
       case _ => throw new IllegalArgumentException(s"cannot parse EXECUTE: $stmt")
     }
   }
@@ -1611,20 +1592,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
 
   // ----------------------------------------------------------------- DDL
 
-  /** Split at top-level commas (outside parens/quotes). */
-  private def topSplit(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]; val cur = new StringBuilder
-    var depth = 0; var inS = false
-    s.foreach {
-      case '\'' => inS = !inS; cur += '\''
-      case '(' if !inS => depth += 1; cur += '('
-      case ')' if !inS => depth -= 1; cur += ')'
-      case ',' if !inS && depth == 0 => out += cur.toString.trim; cur.clear()
-      case c => cur += c
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.result()
-  }
+  /** Split at top-level commas (outside parens, brackets and opaque
+    * spans). */
+  private def topSplit(s: String): Seq[String] = new SqlLexer(s).split(',')
 
   private val createTableRe: Regex =
     """(?is)CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w"]+)\s*\((.*)\)\s*""".r
@@ -2431,15 +2401,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
             "\\copy requires arguments")).trim
         val (qHead, clauseTail) =
           if (rest.startsWith("(")) {
-            var d = 0; var i = 0; var close = -1
-            while (i < rest.length && close < 0) {
-              rest.charAt(i) match {
-                case '(' => d += 1
-                case ')' => d -= 1; if (d == 0) close = i
-                case _ =>
-              }
-              i += 1
-            }
+            val close = new SqlLexer(rest).balancedClose(0)
             require(close > 0, s"unbalanced parens in \\copy: $stmt")
             (rest.substring(0, close + 1), rest.substring(close + 1))
           } else ("", rest)
@@ -2474,18 +2436,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val qMatch = """(?is)^COPY\s*\(""".r.findPrefixMatchOf(trimmed)
     if (qMatch.isDefined) {
       val open = qMatch.get.end - 1
-      var depth = 0; var j = open; var close = -1
-      while (j < trimmed.length && close < 0) {
-        trimmed.charAt(j) match {
-          case '\'' => // skip literal
-            j += 1
-            while (j < trimmed.length && trimmed.charAt(j) != '\'') j += 1
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        if (close < 0) j += 1
-      }
+      val close = new SqlLexer(trimmed).balancedClose(open)
       require(close > 0, s"unbalanced parens in COPY (query): $stmt")
       val sel = trimmed.substring(open + 1, close)
       val tail = trimmed.substring(close + 1).trim
@@ -2853,33 +2804,13 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       get => { extraCheck(); check(get) }, beforePublish)
   }
 
-  /** Top-level (outside single-quoted literals AND double-quoted
-    * identifiers, paren depth 0) matches of `re`, for peeling trailing
-    * clauses (RETURNING, ON CONFLICT) off a DML statement — the keywords
-    * as literal content in a quoted value or as a quoted identifier
-    * (`SELECT a AS "returning"`) are never matched. */
-  private def topLevelMatches(s: String, re: Regex): List[scala.util.matching.Regex.Match] = {
-    val ok = new Array[Boolean](s.length)
-    var inS = false; var inD = false; var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false; ok(i) = false }
-      else if (inD) { if (c == '"') inD = false; ok(i) = false }
-      else {
-        c match {
-          case '\'' => inS = true
-          case '"' => inD = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ =>
-        }
-        ok(i) = !inS && !inD && depth == 0 && c != '(' && c != ')' && c != '"'
-      }
-      i += 1
-    }
-    re.findAllMatchIn(s).filter(m => ok(m.start)).toList
-  }
+  /** Top-level (on code, nesting depth 0) matches of `re`, for peeling
+    * trailing clauses (RETURNING, ON CONFLICT) off a DML statement — the
+    * keywords as literal content in a quoted value, as a quoted
+    * identifier (`SELECT a AS "returning"`) or in a comment are never
+    * matched. */
+  private def topLevelMatches(s: String, re: Regex): List[scala.util.matching.Regex.Match] =
+    new SqlLexer(s).topLevel(re).toList
 
   private def topLevelMatch(s: String, re: Regex): Option[scala.util.matching.Regex.Match] =
     topLevelMatches(s, re).headOption
@@ -2972,15 +2903,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       if (rest.startsWith("(")) {
         // balanced-paren scan: a nested-paren target followed by DO is a
         // genuine (unsupported) clause; anything else is not a clause
-        var depth = 0; var j = 0; var close = -1
-        while (j < rest.length && close < 0) {
-          rest.charAt(j) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = j
-            case _ =>
-          }
-          j += 1
-        }
+        val close = new SqlLexer(rest).balancedClose(0)
         if (close >= 0 && rest.substring(close + 1).trim.matches("(?is)^DO\\b.*"))
           throw new IllegalArgumentException(
             s"cannot parse ON CONFLICT clause (expression conflict targets " +
@@ -3312,39 +3235,16 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   }
 
   /** Split `body` at the first top-level occurrence of keyword `kw` —
-    * outside string literals, quoted identifiers, comments and parens,
-    * so `SET note = 'a where b'` and `extract(month FROM d)` parse
-    * correctly. */
+    * on code (outside string literals, quoted identifiers and comments)
+    * at nesting depth 0, after whitespace or at the start, and not followed
+    * by a letter or digit — so `SET note = 'a where b'`, a column named
+    * "where" and `extract(month FROM d)` parse correctly. */
   private def splitTopLevelKeyword(body: String, kw: String): (String, Option[String]) = {
-    // same opacity classes as StatementSplitter: quoted literals, quoted
-    // identifiers (a column named "where"), -- and /* */ comments
-    var i = 0; var inS = false; var inD = false
-    var inLine = false; var inBlock = false; var depth = 0
-    val k = kw.length
-    while (i < body.length) {
-      val c = body.charAt(i)
-      val next = if (i + 1 < body.length) body.charAt(i + 1) else ' '
-      if (inLine) { if (c == '\n') inLine = false }
-      else if (inBlock) { if (c == '*' && next == '/') { inBlock = false; i += 1 } }
-      else if (inS) { if (c == '\'') inS = false }
-      else if (inD) { if (c == '"') inD = false }
-      else c match {
-        case '-' if next == '-' => inLine = true; i += 1
-        case '/' if next == '*' => inBlock = true; i += 1
-        case '\'' => inS = true
-        case '"' => inD = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ch if depth == 0 && ch.toUpper == kw.charAt(0) &&
-            body.regionMatches(true, i, kw, 0, k) &&
-            (i == 0 || body.charAt(i - 1).isWhitespace) &&
-            (i + k >= body.length || !body.charAt(i + k).isLetterOrDigit) =>
-          return (body.substring(0, i).trim, Some(body.substring(i + k).trim))
-        case _ =>
-      }
-      i += 1
+    val re = new Regex("(?i)(?<!\\S)" + java.util.regex.Pattern.quote(kw) + "(?![\\p{L}\\p{Nd}])")
+    new SqlLexer(body).topLevel(re).nextOption() match {
+      case Some(m) => (body.substring(0, m.start).trim, Some(body.substring(m.end).trim))
+      case None => (body.trim, None)
     }
-    (body.trim, None)
   }
 
   private def splitTopLevelWhere(body: String): (String, Option[String]) =

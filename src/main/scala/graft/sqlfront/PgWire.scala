@@ -952,40 +952,12 @@ final class PgWire(gs: GraftSession, port: Int = 0,
     case _ => None
   }
 
-  /** Scan `query`, replacing each `$N` outside string literals with
-    * `lit(N-1)`. String literals are opaque (a '$1' inside text is
-    * content — same discipline as GraftSession's PREPARE). */
-  private def replacePlaceholders(query: String)(lit: Int => String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < query.length) {
-      val c = query.charAt(i)
-      if (c == '\'') { // copy string literal verbatim ('' escape)
-        sb.append(c); i += 1
-        var closed = false
-        while (i < query.length && !closed) {
-          sb.append(query.charAt(i))
-          if (query.charAt(i) == '\'') {
-            if (i + 1 < query.length && query.charAt(i + 1) == '\'') {
-              sb.append('\''); i += 2
-            } else { closed = true; i += 1 }
-          } else i += 1
-        }
-      } else if (c == '$' && i + 1 < query.length && query.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < query.length && query.charAt(j).isDigit) j += 1
-        sb.append(lit(query.substring(i + 1, j).toInt - 1))
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** Substitute `$N` placeholders with typed literals. Text-format values
     * arrive as strings; the Parse-declared OID adds an explicit CAST so
     * comparisons use the client's intended type. */
   private def substituteParams(query: String, values: Seq[String], oids: Seq[Int]): String =
-    replacePlaceholders(query) { idx =>
+    SqlLexer.bindPlaceholders(query) { n =>
+      val idx = n - 1
       if (idx < 0 || idx >= values.length)
         throw new IllegalArgumentException(s"no parameter $$${idx + 1}")
       val v = values(idx)
@@ -1003,8 +975,8 @@ final class PgWire(gs: GraftSession, port: Int = 0,
     * Parse message declared an OID, bare NULL otherwise) — schema-only
     * planning for statement-level Describe, where no Bind has happened. */
   private def nullPlaceholders(query: String, oids: Seq[Int]): String =
-    replacePlaceholders(query) { idx =>
-      oids.lift(idx).filter(_ != 0).flatMap(sqlType)
+    SqlLexer.bindPlaceholders(query) { n =>
+      oids.lift(n - 1).filter(_ != 0).flatMap(sqlType)
         .map(t => s"CAST(NULL AS $t)").getOrElse("NULL")
     }
 }

@@ -1,56 +1,14 @@
 package graft.sqlfront
 
+import scala.util.matching.Regex
+import scala.util.matching.Regex.Match
 import org.apache.spark.sql.types._
 
 /** Multi-statement splitter (reference StatementSplitter.java +
-  * QueryService.java:85-141): split on top-level ';', honoring single
-  * quotes ('' escape), double-quoted identifiers, line (--) and block
-  * comments. */
+  * QueryService.java:85-141): split on every code ';' — [[SqlLexer]]
+  * decides what is code — and strip comments. */
 object StatementSplitter {
-  def split(sql: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inS = false; var inD = false; var inLine = false; var inBlock = false
-    // PG dollar-quoted body: `$$ … $$` or tagged `$tag$ … $tag$` (e.g. DO
-    // blocks, function bodies). Non-null = the exact closing delimiter.
-    var dollarClose: String = null
-    // `$tag$` opener at position p, or null ($ alone is not an opener)
-    def dollarOpenAt(p: Int): String = {
-      if (sql.charAt(p) != '$') return null
-      var j = p + 1
-      while (j < sql.length && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) j += 1
-      if (j < sql.length && sql.charAt(j) == '$') sql.substring(p, j + 1) else null
-    }
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val next = if (i + 1 < sql.length) sql.charAt(i + 1) else ' '
-      if (inLine) { if (c == '\n') { inLine = false; cur += c } ; i += 1 }
-      else if (inBlock) { if (c == '*' && next == '/') { inBlock = false; i += 2 } else i += 1 }
-      else if (dollarClose != null) {
-        if (c == '$' && sql.startsWith(dollarClose, i)) {
-          cur ++= dollarClose; i += dollarClose.length; dollarClose = null
-        } else { cur += c; i += 1 }
-      }
-      else if (inS) { cur += c; if (c == '\'') { if (next == '\'') { cur += next; i += 1 } else inS = false }; i += 1 }
-      else if (inD) { cur += c; if (c == '"') inD = false; i += 1 }
-      else c match {
-        case '-' if next == '-' => inLine = true; i += 2
-        case '$' if dollarOpenAt(i) != null =>
-          val tag = dollarOpenAt(i)
-          dollarClose = tag; cur ++= tag; i += tag.length
-        case '/' if next == '*' => inBlock = true; i += 2
-        case '\'' => inS = true; cur += c; i += 1
-        case '"' => inD = true; cur += c; i += 1
-        case ';' =>
-          val t = cur.toString.trim; if (t.nonEmpty) out += t; cur.clear(); i += 1
-        case _ => cur += c; i += 1
-      }
-    }
-    val t = cur.toString.trim
-    if (t.nonEmpty) out += t
-    out.result()
-  }
+  def split(sql: String): Seq[String] = new SqlLexer(sql).statements
 }
 
 /** PostgreSQL-syntax pre-rewrite (SURVEY §4.3.1): a deterministic string
@@ -61,6 +19,11 @@ object StatementSplitter {
   * Handled: `->` / `->>` (key and array-index), `#>` / `#>>` path
   * operators → `get_json_object`, and `expr::type` casts → CAST(). The
   * `||` concat and standard functions need no rewrite (Spark-native).
+  *
+  * Every pass is one left-to-right pass over one [[SqlLexer]]: literals,
+  * quoted identifiers, comments and dollar-quoted bodies are opaque, so
+  * trigger text stored in them is never rewritten as syntax. A pass
+  * that changes nothing hands its lexer on to the next one.
   */
 object PgRewrite {
   // LHS of a JSON operator: a column reference or a string literal
@@ -71,100 +34,101 @@ object PgRewrite {
   private val keyOnGjo = """get_json_object\(([\w\.]+),\s*'(\$[^']*)'\)\s*->(>?)\s*'([^']+)'""".r
   private val idxOnGjo = """get_json_object\(([\w\.]+),\s*'(\$[^']*)'\)\s*->(>?)\s*(\d+)""".r
   private val regexOp = """([\w\.]+)\s*(!?)~(\*?)\s*('(?:[^']|'')*')""".r
-  // literal operand is escape-aware ('' stays inside the literal) so
-  // `'it''s'::text` captures the WHOLE literal, not a tail slice of it
-  private val castSimple = """((?:\w+\.)*\w+|'(?:[^']|'')*')::(\w+(?:\s+precision)?(?:\(\d+(?:,\d+)?\))?)""".r
   private val castType = """\w+(?:\s+precision)?(?:\(\d+(?:,\d+)?\))?""".r
 
-  /** Spans [start, end) of single-quoted literals ('' escape honored)
-    * AND backtick-quoted identifiers (`` escape honored). The
-    * quoted-identifier pass runs FIRST in the pipeline, so by the time
-    * any later rewrite scans, keyword-like text from a PG double-quoted
-    * identifier (`"FOR UPDATE"`, `"unnest(x)"`) lives between backticks
-    * — both span kinds must be opaque to every rewrite or identifier
-    * content gets rewritten as syntax. */
-  private def literalSpans(s: String): Array[(Int, Int)] = {
-    val spans = Array.newBuilder[(Int, Int)]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '`') {
-        val start = i; i += 1
-        var done = false
-        while (i < s.length && !done) {
-          if (s.charAt(i) == c) {
-            if (i + 1 < s.length && s.charAt(i + 1) == c) i += 2
-            else { done = true; i += 1 }
-          } else i += 1
-        }
-        spans += ((start, i))
-      } else i += 1
-    }
-    spans.result()
+  private type Pass = SqlLexer => String
+
+  /** The lexer for `out`: the same one when the pass changed nothing. */
+  private def relex(lx: SqlLexer, out: String): SqlLexer =
+    if (out eq lx.sql) lx else new SqlLexer(out)
+
+  private def chain(passes: Pass*): Pass =
+    lx => passes.foldLeft(lx)((l, p) => relex(l, p(l))).sql
+
+  /** Replace every match of `re` whose operator position `at` is code.
+    * The operand regexes may legitimately START on a literal (literal
+    * LHS), so the gate keys on the operator, not the match start. */
+  private def gated(re: Regex, at: Match => Int = _.start)(repl: Match => String): Pass =
+    lx => lx.rewrite(re, at = at)(m => Some((m.start, m.end, repl(m))))
+
+  private def lookingAt(re: Regex, s: String, from: Int, to: Int): Option[Match] = {
+    val m = re.pattern.matcher(s).region(from, to)
+    if (m.lookingAt()) Some(new Match(s, m, Nil).force) else None
   }
 
-  /** Rewrite `expr::type` → `CAST(expr AS type)`. Parenthesized operands
-    * (`(a+b)::int`, `f(x)::int`) need a paren-balanced backward scan — a
-    * regex alternative on `)` would capture only the closer and emit
-    * invalid SQL. String literals are opaque throughout: a `::` inside a
-    * literal is content, and the backward scan steps OVER literals so a
-    * `(` inside one (e.g. `split_part(x, '(', 1)::int`) can't unbalance
-    * it. Inner `::` inside a captured operand are picked up by later
-    * iterations / the simple-operand pass. */
-  private def rewriteCasts(sql: String): String = {
-    var out = sql
-    var i = out.indexOf("::")
-    while (i >= 0) {
-      val spans = literalSpans(out)
-      // `::` strictly inside a literal is content, not a cast
-      val inLiteral = spans.exists { case (a, b) => i > a && i < b - 1 }
-      if (!inLiteral && i > 0 && out.charAt(i - 1) == ')') {
-        // scan back to the balanced '(' and any attached function name,
-        // hopping over whole literals
-        var depth = 0; var j = i - 1; var found = -1
-        while (j >= 0 && found < 0) {
-          val span = spans.find { case (a, b) => j >= a && j < b }
-          if (span.isDefined) j = span.get._1 - 1
-          else {
-            out.charAt(j) match {
-              case ')' => depth += 1
-              case '(' => depth -= 1; if (depth == 0) found = j
-              case _ =>
+  /** Rewrite `expr::type` → `CAST(expr AS type)` in one pass. A
+    * parenthesized operand (`(a+b)::int`, `f(x)::int`) runs back to its
+    * balanced '(' and any attached function name — a regex alternative
+    * on `)` would capture only the closer and emit invalid SQL — and a
+    * cast of such a CAST chains (`(a)::text::int`). A simple operand is
+    * an identifier chain or a string literal (`'it''s'::text` takes the
+    * WHOLE literal). A `::` inside a literal is content. */
+  private def rewriteCasts(lx: SqlLexer): String = {
+    val sql = lx.sql
+    if (!sql.contains("::")) return sql
+    val out = new java.lang.StringBuilder(sql.length + 64)
+    val outAt = Array.fill(sql.length)(-1) // output offset of each code '('
+    val tm = castType.pattern.matcher(sql)
+    var litAt = -1  // output offset of the literal the output ends with
+    var castAt = -1 // output offset of the parenthesized CAST it ends with
+    def isW(c: Char) = c < 128 && (c.isLetterOrDigit || c == '_')
+    lx.foreachSegment() { (kind, a, b) =>
+      if (kind != SqlLexer.Code) {
+        litAt = if (kind == SqlLexer.Literal) out.length else -1
+        castAt = -1
+        out.append(sql, a, b)
+      } else {
+        var i = a
+        while (i < b) {
+          val c = sql.charAt(i)
+          if (c == ':' && i + 1 < b && sql.charAt(i + 1) == ':' &&
+              tm.region(i + 2, sql.length).lookingAt()) {
+            val open = if (castAt < 0 && i > a && sql.charAt(i - 1) == ')')
+              lx.balancedOpen(i - 1) else -1
+            val parenAt =
+              if (castAt >= 0) castAt
+              else if (open >= 0 && outAt(open) >= 0) {
+                var k = outAt(open) - 1
+                while (k >= 0 && (out.charAt(k).isLetterOrDigit ||
+                  out.charAt(k) == '_' || out.charAt(k) == '.')) k -= 1
+                k + 1
+              } else -1
+            val start =
+              if (parenAt >= 0) parenAt
+              else if (litAt >= 0) litAt
+              else { // identifier chain (?:\w+\.)*\w+ ending at the output's end
+                var k = out.length
+                while (k > 0 && isW(out.charAt(k - 1))) k -= 1
+                var chainAt = if (k < out.length) k else -1
+                while (chainAt > 1 && out.charAt(chainAt - 1) == '.' && isW(out.charAt(chainAt - 2))) {
+                  k = chainAt - 1
+                  while (k > 0 && isW(out.charAt(k - 1))) k -= 1
+                  chainAt = k
+                }
+                chainAt
+              }
+            if (start >= 0) {
+              val operand = out.substring(start)
+              out.setLength(start)
+              out.append("CAST(").append(operand).append(" AS ").append(tm.group()).append(')')
+              castAt = if (parenAt >= 0) start else -1
+              litAt = -1
+              i = tm.end
+            } else {
+              out.append("::"); litAt = -1; castAt = -1; i += 2
             }
-            if (found < 0) j -= 1
+          } else {
+            if (c == '(') outAt(i) = out.length
+            out.append(c); litAt = -1; castAt = -1; i += 1
           }
         }
-        val next = castType.findPrefixMatchOf(out.substring(i + 2)) match {
-          case Some(m) if found >= 0 =>
-            var k = found - 1
-            while (k >= 0 && (out.charAt(k).isLetterOrDigit ||
-              out.charAt(k) == '_' || out.charAt(k) == '.')) k -= 1
-            val start = k + 1
-            val operand = out.substring(start, i)
-            out = out.substring(0, start) +
-              s"CAST($operand AS ${m.matched})" + out.substring(i + 2 + m.end)
-            start
-          case _ => i + 2
-        }
-        i = out.indexOf("::", next)
-      } else i = out.indexOf("::", i + 2)
+      }
     }
-    val spans = literalSpans(out)
-    castSimple.replaceSomeIn(out, m => {
-      val cp = m.end(1) // position of the "::"
-      if (spans.exists { case (a, b) => cp > a && cp < b - 1 }) None
-      else Some(java.util.regex.Matcher.quoteReplacement(
-        s"CAST(${m.group(1)} AS ${m.group(2)})"))
-    })
+    out.toString
   }
 
-  /** True when `pos` falls strictly inside a quoted literal — operator
-    * text stored IN a string (e.g. an inserted TEXT value that happens to
-    * contain `col ~ 'pat'` or `a->>'k'`) is content, never syntax. The
-    * operand regexes themselves may legitimately START on a literal
-    * (literal LHS), so gating keys on the OPERATOR's position. */
-  private def inLiteral(spans: Array[(Int, Int)], pos: Int): Boolean =
-    spans.exists { case (a, b) => pos > a && pos < b - 1 }
+  private val aggFn = """(?i)\b(array_agg|string_agg)\s*\(""".r
+  private val orderByKw = """(?i)\bORDER\s+BY\b""".r
 
   /** PG aggregate-internal ORDER BY (`array_agg(x ORDER BY y [DESC])`,
     * `string_agg(x, d ORDER BY y)`) → Spark spellings. Spark parses the
@@ -179,77 +143,51 @@ object PgRewrite {
     * value — deterministic under ties; all-DESC wraps in reverse(); mixed
     * ASC/DESC directions are rejected rather than silently mis-sorted.)
     */
-  private def rewriteAggOrderBy(sql: String): String = {
-    val fnRe = """(?i)\b(array_agg|string_agg)\s*\(""".r
-    val spans = literalSpans(sql)
-    fnRe.findAllMatchIn(sql).toSeq.reverseIterator.foldLeft(sql) { (s, m) =>
-      if (inLiteral(spans, m.start)) s
-      else {
-        // balanced scan to the close paren, stepping over literals
-        val open = m.end - 1
-        var depth = 0; var j = open; var close = -1
-        while (j < s.length && close < 0) {
-          val span = literalSpans(s).find { case (a, b) => j >= a && j < b }
-          if (span.isDefined) j = span.get._2
+  private def rewriteAggOrderBy(lx: SqlLexer): String = {
+    def go(lo: Int, hi: Int): String = lx.rewrite(aggFn, lo, hi) { m =>
+      val open = m.end - 1
+      val close = lx.balancedClose(open)
+      if (close < 0) throw new IllegalArgumentException(
+        s"unbalanced parens in ${m.group(1)} call: ${lx.sql}")
+      // the call's own ORDER BY: top level of its argument list
+      lx.topLevel(orderByKw, open + 1, close).nextOption().map { mm =>
+        val aggArgs = go(open + 1, mm.start).trim
+        val orderBy = go(mm.end, close).trim
+        val repl =
+          if (m.group(1).equalsIgnoreCase("string_agg"))
+            s"string_agg($aggArgs) WITHIN GROUP (ORDER BY $orderBy)"
           else {
-            s.charAt(j) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ =>
+            val keys = lx.splitRanges(',', mm.end, close).map { case (a, b) => go(a, b).trim }
+            def dir(k: String): (String, Boolean) = {
+              val u = k.toUpperCase
+              if (u.endsWith(" DESC")) (k.dropRight(5).trim, true)
+              else if (u.endsWith(" ASC")) (k.dropRight(4).trim, false)
+              else (k, false)
             }
-            if (close < 0) j += 1
+            val parsed = keys.map(dir)
+            val descs = parsed.map(_._2).distinct
+            if (descs.length > 1) throw new IllegalArgumentException(
+              s"array_agg ORDER BY with mixed ASC/DESC directions is not supported: $orderBy")
+            val desc = descs.headOption.getOrElse(false)
+            val exprs = parsed.map(_._1)
+            if (exprs.length == 1 && exprs.head.equalsIgnoreCase(aggArgs))
+              if (desc) s"sort_array(array_agg($aggArgs), false)"
+              else s"sort_array(array_agg($aggArgs))"
+            else {
+              val keyFields = exprs.zipWithIndex
+                .map { case (k, i) => s"$k AS _o${i + 1}" }.mkString(", ")
+              val sorted = s"array_sort(array_agg(struct($keyFields, $aggArgs AS _v)))"
+              val ordered = if (desc) s"reverse($sorted)" else sorted
+              s"transform($ordered, s -> s._v)"
+            }
           }
-        }
-        val args = s.substring(open + 1, close)
-        // top-level " ORDER BY " split (outside nested parens/literals)
-        val ob = {
-          val re = """(?i)\bORDER\s+BY\b""".r
-          val inner = literalSpans(args)
-          re.findAllMatchIn(args).find { mm =>
-            !inner.exists { case (a, b) => mm.start > a && mm.start < b } &&
-              args.substring(0, mm.start).count(_ == '(') ==
-              args.substring(0, mm.start).count(_ == ')')
-          }
-        }
-        ob match {
-          case None => s
-          case Some(mm) =>
-            val aggArgs = args.substring(0, mm.start).trim
-            val orderBy = args.substring(mm.end).trim
-            val fn = m.group(1).toLowerCase
-            val repl =
-              if (fn == "string_agg")
-                s"string_agg($aggArgs) WITHIN GROUP (ORDER BY $orderBy)"
-              else {
-                val keys = orderBy.split(",").map(_.trim).filter(_.nonEmpty)
-                def dir(k: String): (String, Boolean) = {
-                  val u = k.toUpperCase
-                  if (u.endsWith(" DESC")) (k.dropRight(5).trim, true)
-                  else if (u.endsWith(" ASC")) (k.dropRight(4).trim, false)
-                  else (k, false)
-                }
-                val parsed = keys.map(dir)
-                val descs = parsed.map(_._2).distinct
-                if (descs.length > 1) throw new IllegalArgumentException(
-                  s"array_agg ORDER BY with mixed ASC/DESC directions is not supported: $orderBy")
-                val desc = descs.headOption.getOrElse(false)
-                val exprs = parsed.map(_._1)
-                if (exprs.length == 1 && exprs.head.equalsIgnoreCase(aggArgs))
-                  if (desc) s"sort_array(array_agg($aggArgs), false)"
-                  else s"sort_array(array_agg($aggArgs))"
-                else {
-                  val keyFields = exprs.zipWithIndex
-                    .map { case (k, i) => s"$k AS _o${i + 1}" }.mkString(", ")
-                  val sorted = s"array_sort(array_agg(struct($keyFields, $aggArgs AS _v)))"
-                  val ordered = if (desc) s"reverse($sorted)" else sorted
-                  s"transform($ordered, s -> s._v)"
-                }
-              }
-            s.substring(0, m.start) + repl + s.substring(close + 1)
-        }
+        (m.start, close + 1, repl)
       }
     }
+    go(0, lx.sql.length)
   }
+
+  private val fetchTies = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:\d+\s+)?ROWS?\s+WITH\s+TIES""".r
 
   /** ANSI/PG row-limit spellings Spark's parser lacks (the reference
     * grammar has LIMIT/OFFSET only — sql/parser/SqlParser.java — but PG
@@ -260,26 +198,17 @@ object PgRewrite {
     * Spark's grammar requires LIMIT before OFFSET, so the combined form
     * swaps the clauses. FETCH … WITH TIES has no LIMIT twin and is
     * rejected loudly rather than silently dropping the tie rows. */
-  private def rewriteFetchFirst(sql: String): String = {
-    val u = sql.toUpperCase
-    if (!u.contains("FETCH") && !u.contains("OFFSET")) return sql
-    def gate(re: scala.util.matching.Regex, s: String)(
-        repl: scala.util.matching.Regex.Match => String): String = {
-      val spans = literalSpans(s)
-      re.replaceSomeIn(s, m => if (inLiteral(spans, m.start)) None
-        else Some(java.util.regex.Matcher.quoteReplacement(repl(m))))
-    }
-    val ties = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:\d+\s+)?ROWS?\s+WITH\s+TIES""".r
-    val spans0 = literalSpans(sql)
-    ties.findFirstMatchIn(sql).foreach { m =>
-      if (!inLiteral(spans0, m.start)) throw new IllegalArgumentException(
-        "FETCH ... WITH TIES is not supported; filter on a rank() window instead")
-    }
-    var s = gate("""(?i)\bOFFSET\s+(\d+)\s+(?:ROWS?\s+)?FETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY""".r, sql)(
-      m => s"LIMIT ${Option(m.group(2)).getOrElse("1")} OFFSET ${m.group(1)}")
-    s = gate("""(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY""".r, s)(
-      m => s"LIMIT ${Option(m.group(1)).getOrElse("1")}")
-    gate("""(?i)\b(OFFSET\s+\d+)\s+ROWS?\b""".r, s)(m => m.group(1))
+  private def rewriteFetchFirst(lx: SqlLexer): String = {
+    val u = lx.sql.toUpperCase
+    if (!u.contains("FETCH") && !u.contains("OFFSET")) return lx.sql
+    if (lx.codeMatches(fetchTies).hasNext) throw new IllegalArgumentException(
+      "FETCH ... WITH TIES is not supported; filter on a rank() window instead")
+    chain(
+      gated("""(?i)\bOFFSET\s+(\d+)\s+(?:ROWS?\s+)?FETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY""".r)(
+        m => s"LIMIT ${Option(m.group(2)).getOrElse("1")} OFFSET ${m.group(1)}"),
+      gated("""(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY""".r)(
+        m => s"LIMIT ${Option(m.group(1)).getOrElse("1")}"),
+      gated("""(?i)\b(OFFSET\s+\d+)\s+ROWS?\b""".r)(m => m.group(1)))(lx)
   }
 
   /** PG `TABLESAMPLE {BERNOULLI|SYSTEM}(p) [REPEATABLE(seed)]` →
@@ -290,17 +219,20 @@ object PgRewrite {
     * guarantees). REPEATABLE keeps PG's contract — determinism across
     * runs for the same seed on the same data — via Spark's seeded
     * sampler; without it both engines are free-running random. */
-  private def rewriteTableSample(sql: String): String = {
-    if (!sql.toUpperCase.contains("TABLESAMPLE")) return sql
-    val re = ("""(?i)\bTABLESAMPLE\s+(BERNOULLI|SYSTEM)\s*\(\s*([\d.]+)\s*\)""" +
-      """(?:\s*REPEATABLE\s*\(\s*(\d+)\s*\))?""").r
-    val spans = literalSpans(sql)
-    re.replaceSomeIn(sql, m =>
-      if (inLiteral(spans, m.start)) None
-      else Some(java.util.regex.Matcher.quoteReplacement(
-        s"TABLESAMPLE (${m.group(2)} PERCENT)" +
-          Option(m.group(3)).fold("")(seed => s" REPEATABLE ($seed)"))))
+  private def rewriteTableSample(lx: SqlLexer): String = {
+    if (!lx.sql.toUpperCase.contains("TABLESAMPLE")) return lx.sql
+    gated(("""(?i)\bTABLESAMPLE\s+(BERNOULLI|SYSTEM)\s*\(\s*([\d.]+)\s*\)""" +
+      """(?:\s*REPEATABLE\s*\(\s*(\d+)\s*\))?""").r)(m =>
+      s"TABLESAMPLE (${m.group(2)} PERCENT)" +
+        Option(m.group(3)).fold("")(seed => s" REPEATABLE ($seed)"))(lx)
   }
+
+  private val seriesFn = """(?i)(\bFROM|\bJOIN|,)(\s*)generate_series\s*\(""".r
+  private val seriesAlias = """(?is)^\s*(?:AS\s+)?([A-Za-z_]\w*)(\s*\(\s*([A-Za-z_]\w*)\s*\))?""".r
+  private val clauseKw = Set("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET",
+    "FETCH", "UNION", "INTERSECT", "EXCEPT", "JOIN", "ON", "USING",
+    "CROSS", "INNER", "LEFT", "RIGHT", "FULL", "NATURAL", "WINDOW",
+    "QUALIFY", "RETURNING")
 
   /** PG set-returning `generate_series(a, b[, step])` in FROM position →
     * Spark's `explode(sequence(a, b[, step]))` table-valued function
@@ -311,65 +243,28 @@ object PgRewrite {
     * FROM/JOIN, or a FROM-list comma at top paren depth (an
     * argument-position call is always inside at least one paren and is
     * left untouched). */
-  private def rewriteGenerateSeries(sql: String): String = {
+  private def rewriteGenerateSeries(lx: SqlLexer): String = {
+    val sql = lx.sql
     if (!sql.toLowerCase.contains("generate_series")) return sql
-    val re = """(?i)(\bFROM|\bJOIN|,)(\s*)generate_series\s*\(""".r
-    val kw = Set("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET",
-      "FETCH", "UNION", "INTERSECT", "EXCEPT", "JOIN", "ON", "USING",
-      "CROSS", "INNER", "LEFT", "RIGHT", "FULL", "NATURAL", "WINDOW",
-      "QUALIFY", "RETURNING")
-    var out = sql
-    var progress = true
-    while (progress) {
-      progress = false
-      val spans = literalSpans(out)
-      val next = re.findAllMatchIn(out).find { mm =>
-        if (inLiteral(spans, mm.start)) false
-        else if (mm.group(1) != ",") true
-        else { // a FROM-list comma sits at paren depth 0; args commas don't
-          var d = 0; var i = 0
-          while (i < mm.start) {
-            if (!inLiteral(spans, i)) {
-              val c = out.charAt(i)
-              if (c == '(') d += 1 else if (c == ')') d -= 1
-            }
-            i += 1
-          }
-          d == 0
-        }
-      }
-      next.foreach { mm =>
+    def go(lo: Int, hi: Int): String = lx.rewrite(seriesFn, lo, hi) { mm =>
+      // a FROM-list comma sits at paren depth 0; args commas don't
+      if (mm.group(1) == "," && lx.depth(mm.start) != 0) None
+      else {
         val open = mm.end - 1
-        var d = 0; var j = open; var close = -1
-        while (j < out.length && close < 0) {
-          val span = spans.find { case (a, b) => j >= a && j < b }
-          if (span.isDefined) j = span.get._2
-          else {
-            out.charAt(j) match {
-              case '(' => d += 1
-              case ')' => d -= 1; if (d == 0) close = j
-              case _ =>
-            }
-            if (close < 0) j += 1
-          }
-        }
+        val close = lx.balancedClose(open)
         if (close < 0) throw new IllegalArgumentException(
-          s"unbalanced parens in generate_series call: $out")
-        val args = out.substring(open + 1, close)
-        val tail = out.substring(close + 1)
-        val aliasRe = """(?is)^\s*(?:AS\s+)?([A-Za-z_]\w*)(\s*\(\s*([A-Za-z_]\w*)\s*\))?""".r
-        val (alias, consumed) = aliasRe.findFirstMatchIn(tail) match {
-          case Some(am) if !kw.contains(am.group(1).toUpperCase) =>
+          s"unbalanced parens in generate_series call: $sql")
+        val (alias, end) = lookingAt(seriesAlias, sql, close + 1, hi) match {
+          case Some(am) if !clauseKw.contains(am.group(1).toUpperCase) =>
             val rel = am.group(1)
             (s" AS $rel(${Option(am.group(3)).getOrElse(rel)})", am.end)
-          case _ => (" AS generate_series(generate_series)", 0)
+          case _ => (" AS generate_series(generate_series)", close + 1)
         }
-        out = out.substring(0, mm.start) + mm.group(1) + mm.group(2) +
-          s"explode(sequence($args))" + alias + tail.substring(consumed)
-        progress = true
+        Some((mm.start, end, mm.group(1) + mm.group(2) +
+          s"explode(sequence(${go(open + 1, close)}))" + alias))
       }
     }
-    out
+    go(0, sql.length)
   }
 
   /** PG `expr [NOT] SIMILAR TO 'pattern'` → anchored RLIKE. SQL-regex →
@@ -378,75 +273,52 @@ object PgRewrite {
     * {}`) pass through unchanged. Spark has no SIMILAR TO at all;
     * literal patterns only (a computed pattern stays untouched and fails
     * loudly in Spark's parser rather than silently matching wrong). */
-  private def rewriteSimilarTo(sql: String): String = {
-    if (!sql.toUpperCase.contains("SIMILAR")) return sql
+  private def rewriteSimilarTo(lx: SqlLexer): String = {
+    if (!lx.sql.toUpperCase.contains("SIMILAR")) return lx.sql
     val re = """([\w\.]+)\s+(NOT\s+)?(?i:SIMILAR)\s+(?i:TO)\s+('(?:[^']|'')*')""".r
-    val spans = literalSpans(sql)
-    re.replaceSomeIn(sql, m => {
-      val opPos = m.start(0) + m.group(1).length
-      if (inLiteral(spans, opPos)) None
-      else {
-        val body = m.group(3).drop(1).dropRight(1)
-        val conv = new StringBuilder("^(?:")
-        var i = 0
-        while (i < body.length) {
-          body.charAt(i) match {
-            case '\\' if i + 1 < body.length => // escaped char passes through
-              conv += '\\' += body.charAt(i + 1); i += 1
-            case '%' => conv ++= ".*"
-            case '_' => conv += '.'
-            case '.' => conv ++= "\\."
-            case c => conv += c
-          }
-          i += 1
+    gated(re, m => m.start + m.group(1).length) { m =>
+      val body = m.group(3).drop(1).dropRight(1)
+      val conv = new StringBuilder("^(?:")
+      var i = 0
+      while (i < body.length) {
+        body.charAt(i) match {
+          case '\\' if i + 1 < body.length => // escaped char passes through
+            conv += '\\' += body.charAt(i + 1); i += 1
+          case '%' => conv ++= ".*"
+          case '_' => conv += '.'
+          case '.' => conv ++= "\\."
+          case c => conv += c
         }
-        conv ++= ")$"
-        val neg = m.group(2) != null
-        val e = s"${m.group(1)} RLIKE '${conv.toString}'"
-        Some(java.util.regex.Matcher.quoteReplacement(
-          if (neg) s"NOT ($e)" else e))
+        i += 1
       }
-    })
+      conv ++= ")$"
+      val e = s"${m.group(1)} RLIKE '${conv.toString}'"
+      if (m.group(2) != null) s"NOT ($e)" else e
+    }(lx)
   }
+
+  private val arrayCtor = """(?i)\bARRAY\s*\[""".r
 
   /** PG `ARRAY[e1, e2, …]` constructor → Spark `array(e1, e2, …)`
     * (reference sql/parser has no array syntax at all; SURVEY §2.9 maps
-    * `type[]` columns through TypeMap). Balanced-bracket scan so nested
-    * constructors (`ARRAY[ARRAY[1],ARRAY[2]]`) and bracketed content
-    * resolve inside-out across loop iterations; subscript brackets
-    * (`arr[1]`) never match because they don't follow the ARRAY keyword. */
-  private def rewriteArrayLiteral(sql: String): String = {
-    if (!sql.toUpperCase.contains("ARRAY")) return sql
-    val re = """(?i)\bARRAY\s*\[""".r
-    var out = sql
-    var progress = true
-    while (progress) {
-      progress = false
-      val spans = literalSpans(out)
-      re.findAllMatchIn(out).find(mm => !inLiteral(spans, mm.start)).foreach { mm =>
-        val open = mm.end - 1
-        var d = 0; var j = open; var close = -1
-        while (j < out.length && close < 0) {
-          val span = spans.find { case (a, b) => j >= a && j < b }
-          if (span.isDefined) j = span.get._2
-          else {
-            out.charAt(j) match {
-              case '[' => d += 1
-              case ']' => d -= 1; if (d == 0) close = j
-              case _ =>
-            }
-            if (close < 0) j += 1
-          }
-        }
-        if (close < 0) throw new IllegalArgumentException(
-          s"unbalanced brackets in ARRAY[...] constructor: $out")
-        out = out.substring(0, mm.start) +
-          s"array(${out.substring(open + 1, close)})" + out.substring(close + 1)
-        progress = true
-      }
+    * `type[]` columns through TypeMap). Nested constructors
+    * (`ARRAY[ARRAY[1],ARRAY[2]]`) rewrite recursively inside the
+    * balanced brackets; subscript brackets (`arr[1]`) never match
+    * because they don't follow the ARRAY keyword. */
+  private def rewriteArrayLiteral(lx: SqlLexer): String = {
+    if (!lx.sql.toUpperCase.contains("ARRAY")) return lx.sql
+    def go(lo: Int, hi: Int): String = lx.rewrite(arrayCtor, lo, hi) { mm =>
+      val open = mm.end - 1
+      val close = lx.balancedClose(open)
+      if (close < 0) throw new IllegalArgumentException(
+        s"unbalanced brackets in ARRAY[...] constructor: ${lx.sql}")
+      Some((mm.start, close + 1, s"array(${go(open + 1, close)})"))
     }
-    out
+    go(0, lx.sql.length)
   }
+
+  private val anyAll = ("""([\w\.]+|'(?:[^']|'')*')\s*(=|<>|!=)\s*""" +
+    """((?i:ANY)|(?i:ALL))\s*\(""").r
 
   /** PG quantified comparisons (reference grammar: none; PG clients emit
     * them constantly, e.g. JDBC's `setArray` idiom `x = ANY(?)`):
@@ -457,52 +329,31 @@ object PgRewrite {
     * The subquery/array split keys on the content's leading keyword.
     * `= ALL` / `<> ANY` have no IN/array_contains twin and are rejected
     * loudly rather than silently inverted. */
-  private def rewriteAnyAll(sql: String): String = {
-    val u = sql.toUpperCase
-    if (!u.contains("ANY") && !u.contains("ALL")) return sql
-    val re = ("""([\w\.]+|'(?:[^']|'')*')\s*(=|<>|!=)\s*""" +
-      """((?i:ANY)|(?i:ALL))\s*\(""").r
-    var out = sql
-    var progress = true
-    while (progress) {
-      progress = false
-      val spans = literalSpans(out)
-      re.findAllMatchIn(out).find(mm => !inLiteral(spans, mm.end(2) - 1)).foreach { mm =>
-        val open = mm.end - 1
-        var d = 0; var j = open; var close = -1
-        while (j < out.length && close < 0) {
-          val span = spans.find { case (a, b) => j >= a && j < b }
-          if (span.isDefined) j = span.get._2
-          else {
-            out.charAt(j) match {
-              case '(' => d += 1
-              case ')' => d -= 1; if (d == 0) close = j
-              case _ =>
-            }
-            if (close < 0) j += 1
-          }
-        }
-        if (close < 0) throw new IllegalArgumentException(
-          s"unbalanced parens in ANY/ALL: $out")
-        val lhs = mm.group(1)
-        val op = mm.group(2)
-        val quant = mm.group(3).toUpperCase
-        val content = out.substring(open + 1, close).trim
-        val isSubquery = """(?i)^(SELECT|WITH|VALUES)\b""".r.findFirstIn(content).isDefined
-        val repl = (op, quant) match {
-          case ("=", "ANY") if isSubquery => s"$lhs IN ($content)"
-          case ("<>" | "!=", "ALL") if isSubquery => s"$lhs NOT IN ($content)"
-          case ("=", "ANY") => s"array_contains($content, $lhs)"
-          case ("<>" | "!=", "ALL") => s"NOT array_contains($content, $lhs)"
-          case _ => throw new IllegalArgumentException(
-            s"$op $quant(...) has no IN/array_contains equivalent; " +
-              "rewrite with EXISTS or an aggregate")
-        }
-        out = out.substring(0, mm.start) + repl + out.substring(close + 1)
-        progress = true
+  private def rewriteAnyAll(lx: SqlLexer): String = {
+    val u = lx.sql.toUpperCase
+    if (!u.contains("ANY") && !u.contains("ALL")) return lx.sql
+    def go(lo: Int, hi: Int): String = lx.rewrite(anyAll, lo, hi, _.end(2) - 1) { mm =>
+      val open = mm.end - 1
+      val close = lx.balancedClose(open)
+      if (close < 0) throw new IllegalArgumentException(
+        s"unbalanced parens in ANY/ALL: ${lx.sql}")
+      val lhs = mm.group(1)
+      val op = mm.group(2)
+      val quant = mm.group(3).toUpperCase
+      val content = go(open + 1, close).trim
+      val isSubquery = """(?i)^(SELECT|WITH|VALUES)\b""".r.findFirstIn(content).isDefined
+      val repl = (op, quant) match {
+        case ("=", "ANY") if isSubquery => s"$lhs IN ($content)"
+        case ("<>" | "!=", "ALL") if isSubquery => s"$lhs NOT IN ($content)"
+        case ("=", "ANY") => s"array_contains($content, $lhs)"
+        case ("<>" | "!=", "ALL") => s"NOT array_contains($content, $lhs)"
+        case _ => throw new IllegalArgumentException(
+          s"$op $quant(...) has no IN/array_contains equivalent; " +
+            "rewrite with EXISTS or an aggregate")
       }
+      Some((mm.start, close + 1, repl))
     }
-    out
+    go(0, lx.sql.length)
   }
 
   /** PG `SELECT DISTINCT ON (k1, …) sel FROM body ORDER BY k1, …, tie` —
@@ -520,57 +371,23 @@ object PgRewrite {
     * top-level GROUP BY (`SELECT *` under the window would change the
     * aggregate's shape). The window and outer ORDER BY see base/output
     * columns exactly as PG resolves them. */
-  private def rewriteDistinctOn(sql: String): String = {
-    val re = """(?i)\bSELECT\s+DISTINCT\s+ON\s*\(""".r
-    val spans = literalSpans(sql)
-    val m = re.findAllMatchIn(sql).find(mm => !inLiteral(spans, mm.start))
+  private def rewriteDistinctOn(lx: SqlLexer): String = {
+    val sql = lx.sql
+    val m = lx.codeMatches("""(?i)\bSELECT\s+DISTINCT\s+ON\s*\(""".r).nextOption()
       .getOrElse(return sql)
-    // paren depth at the match — CTE prefixes close to 0, subqueries don't
-    var depth = 0; var i = 0
-    while (i < m.start) {
-      if (!inLiteral(spans, i)) {
-        val c = sql.charAt(i)
-        if (c == '(') depth += 1 else if (c == ')') depth -= 1
-      }
-      i += 1
-    }
-    if (depth != 0) throw new IllegalArgumentException(
+    // CTE prefixes close to depth 0, subqueries don't
+    if (lx.depth(m.start) != 0) throw new IllegalArgumentException(
       "DISTINCT ON in a subquery is not supported; hoist it into a CTE")
-    // balanced key list
     val open = m.end - 1
-    var d = 0; var j = open; var close = -1
-    while (j < sql.length && close < 0) {
-      val span = spans.find { case (a, b) => j >= a && j < b }
-      if (span.isDefined) j = span.get._2
-      else {
-        sql.charAt(j) match {
-          case '(' => d += 1
-          case ')' => d -= 1; if (d == 0) close = j
-          case _ =>
-        }
-        if (close < 0) j += 1
-      }
-    }
+    val close = lx.balancedClose(open)
     if (close < 0) throw new IllegalArgumentException(
       s"unbalanced parens in DISTINCT ON: $sql")
     val keys = sql.substring(open + 1, close)
-    // top-level keyword scan relative to this SELECT's depth
-    def topLevel(from: Int, re2: scala.util.matching.Regex): Option[Int] =
-      re2.findAllMatchIn(sql).filter(x => x.start >= from && !inLiteral(spans, x.start))
-        .find { x =>
-          var dd = 0; var k = close + 1
-          while (k < x.start) {
-            if (!inLiteral(spans, k)) {
-              val c = sql.charAt(k)
-              if (c == '(') dd += 1 else if (c == ')') dd -= 1
-            }
-            k += 1
-          }
-          dd == 0
-        }.map(_.start)
+    def topLevel(from: Int, re: Regex): Option[Int] =
+      lx.topLevel(re, from).nextOption().map(_.start)
     val fromPos = topLevel(close + 1, """(?i)\bFROM\b""".r).getOrElse(
       throw new IllegalArgumentException("DISTINCT ON requires a FROM clause"))
-    val orderPos = topLevel(fromPos, """(?i)\bORDER\s+BY\b""".r).getOrElse(
+    val orderPos = topLevel(fromPos, orderByKw).getOrElse(
       throw new IllegalArgumentException(
         "DISTINCT ON without ORDER BY returns arbitrary rows; add an ORDER BY " +
           "leading with the DISTINCT ON expressions"))
@@ -593,82 +410,25 @@ object PgRewrite {
       s"WHERE __graft_don = 1 ORDER BY $obys" + (if (tail.isEmpty) "" else s" $tail")
   }
 
-  /** Balanced close-paren scan from the '(' at `open`, stepping over
-    * string literals. Returns the index of the matching ')' or -1. */
-  private def balancedClose(s: String, open: Int): Int = {
-    val spans = literalSpans(s)
-    var d = 0; var j = open; var close = -1
-    while (j < s.length && close < 0) {
-      val span = spans.find { case (a, b) => j >= a && j < b }
-      if (span.isDefined) j = span.get._2
-      else {
-        s.charAt(j) match {
-          case '(' => d += 1
-          case ')' => d -= 1; if (d == 0) close = j
-          case _ =>
-        }
-        if (close < 0) j += 1
+  /** Rewrite every code call of `fname` whose args `repl` accepts.
+    * `repl` gets the top-level-split args — each with its own nested
+    * calls already rewritten — and returns the replacement expression,
+    * or None to leave that call unchanged (e.g. a form Spark parses
+    * natively). */
+  private def rewriteCalls(fname: String)(repl: Seq[String] => Option[String]): Pass = lx => {
+    if (!lx.sql.toLowerCase.contains(fname)) lx.sql
+    else {
+      val re = ("""(?i)\b""" + fname + """\s*\(""").r
+      def go(lo: Int, hi: Int): String = lx.rewrite(re, lo, hi) { mm =>
+        val open = mm.end - 1
+        val close = lx.balancedClose(open)
+        if (close < 0) throw new IllegalArgumentException(
+          s"unbalanced parens in $fname call: ${lx.sql}")
+        repl(lx.splitRanges(',', open + 1, close).map { case (a, b) => go(a, b).trim })
+          .map(r => (mm.start, close + 1, r))
       }
+      go(0, lx.sql.length)
     }
-    close
-  }
-
-  /** Split an argument list on top-level commas (nested parens and string
-    * literals are opaque). */
-  private def topSplitArgs(args: String): Seq[String] = {
-    val spans = literalSpans(args)
-    val out = Seq.newBuilder[String]; val cur = new StringBuilder
-    var d = 0; var i = 0
-    while (i < args.length) {
-      val span = spans.find { case (a, b) => i >= a && i < b }
-      if (span.isDefined) { cur ++= args.substring(span.get._1, span.get._2); i = span.get._2 }
-      else {
-        val c = args.charAt(i)
-        if (c == '(') d += 1 else if (c == ')') d -= 1
-        if (c == ',' && d == 0) { out += cur.toString.trim; cur.clear() }
-        else cur += c
-        i += 1
-      }
-    }
-    out += cur.toString.trim
-    out.result()
-  }
-
-  /** Rewrite every non-literal call of `fname` whose args `repl` accepts.
-    * `repl` gets the top-level-split args and returns the replacement
-    * expression, or None to leave that call unchanged (e.g. a form Spark
-    * parses natively). The scan restarts after each rewrite so nested
-    * calls resolve; replacements must not re-introduce a qualifying
-    * call of the same name. */
-  private def rewriteCalls(sql: String, fname: String)(
-      repl: Seq[String] => Option[String]): String = {
-    if (!sql.toLowerCase.contains(fname.toLowerCase)) return sql
-    val re = ("""(?i)\b""" + fname + """\s*\(""").r
-    var out = sql
-    var progress = true
-    val skipped = scala.collection.mutable.Set[Int]()
-    while (progress) {
-      progress = false
-      val spans = literalSpans(out)
-      re.findAllMatchIn(out)
-        .find(mm => !inLiteral(spans, mm.start) && !skipped.contains(mm.start))
-        .foreach { mm =>
-          val open = mm.end - 1
-          val close = balancedClose(out, open)
-          if (close < 0) throw new IllegalArgumentException(
-            s"unbalanced parens in $fname call: $out")
-          repl(topSplitArgs(out.substring(open + 1, close))) match {
-            case Some(r) =>
-              out = out.substring(0, mm.start) + r + out.substring(close + 1)
-              skipped.clear() // positions shifted; re-scan from scratch
-              progress = true
-            case None =>
-              skipped += mm.start // native form: leave it, look past it
-              progress = true
-          }
-        }
-    }
-    out
   }
 
   /** A string literal as a Java-regex that matches it literally, spelled
@@ -685,7 +445,7 @@ object PgRewrite {
 
   private def isStringLiteral(s: String): Boolean =
     s.length >= 2 && s.head == '\'' && s.last == '\'' &&
-      literalSpans(s).exists { case (a, b) => a == 0 && b == s.length }
+      new SqlLexer(s).spanEndAt(0) == s.length
 
   /** PG → Spark format-pattern translation for to_char (longest token
     * first; unknown alphabetic tokens fail loudly rather than silently
@@ -711,6 +471,46 @@ object PgRewrite {
     out.toString
   }
 
+  private val unnestFn = """(?i)\bunnest\s*\(""".r
+  private val withOrdinality = """(?is)\s*WITH\s+ORDINALITY\b""".r
+  private val ordinalityAlias =
+    """(?is)^\s*WITH\s+ORDINALITY\s+(?:AS\s+)?(\w+)\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)""".r
+  private val epochFn = """(?i)\bextract\s*\(\s*epoch\s+from\b""".r
+
+  /** unnest … WITH ORDINALITY, before the plain-name map below (which
+    * would otherwise strand the ordinality tail). */
+  private def rewriteUnnestOrdinality(lx: SqlLexer): String = {
+    val sql = lx.sql
+    if (!sql.toLowerCase.contains("ordinality")) return sql
+    def go(lo: Int, hi: Int): String = lx.rewrite(unnestFn, lo, hi) { mm =>
+      val close = lx.balancedClose(mm.end - 1)
+      if (close < 0 || lookingAt(withOrdinality, sql, close + 1, hi).isEmpty) None
+      else lookingAt(ordinalityAlias, sql, close + 1, hi) match {
+        case Some(am) => Some((mm.start, am.end,
+          s"(SELECT col AS ${am.group(2)}, pos + 1 AS ${am.group(3)} " +
+            s"FROM posexplode(${go(mm.end, close)})) AS ${am.group(1)}"))
+        case None => throw new IllegalArgumentException(
+          "unnest(...) WITH ORDINALITY requires an alias with a column " +
+            "list: AS t(value, ordinality)")
+      }
+    }
+    go(0, sql.length)
+  }
+
+  /** extract(epoch FROM e): Spark's EXTRACT lacks the epoch field. */
+  private def rewriteExtractEpoch(lx: SqlLexer): String = {
+    val sql = lx.sql
+    if (!sql.toLowerCase.contains("epoch")) return sql
+    def go(lo: Int, hi: Int): String = lx.rewrite(epochFn, lo, hi) { mm =>
+      val close = lx.balancedClose(sql.indexOf('(', mm.start))
+      if (close < 0) throw new IllegalArgumentException(
+        s"unbalanced parens in extract(epoch FROM …): $sql")
+      Some((mm.start, close + 1,
+        s"(CAST(unix_micros(CAST((${go(mm.end, close).trim}) AS TIMESTAMP)) AS DOUBLE) / 1000000)"))
+    }
+    go(0, sql.length)
+  }
+
   /** PG set-returning and string-function spellings Spark lacks
     * (reference grammar has none of these; PG clients emit them —
     * SURVEY §2.9):
@@ -729,71 +529,38 @@ object PgRewrite {
     *   extract(epoch FROM e) / date_part('epoch', e)
     *     → (CAST(unix_micros(CAST(e AS TIMESTAMP)) AS DOUBLE) / 1000000)
     *     (other fields are Spark-native) */
-  private def rewritePgFunctions(sql: String): String = {
-    var s = sql
-    // unnest … WITH ORDINALITY first (consumes the unnest call); the
-    // plain-name map below would otherwise strand the ordinality tail
-    if (s.toLowerCase.contains("ordinality")) {
-      val re = """(?i)\bunnest\s*\(""".r
-      var progress = true
-      while (progress) {
-        progress = false
-        val spans = literalSpans(s)
-        re.findAllMatchIn(s).find { mm =>
-          !inLiteral(spans, mm.start) && {
-            val close = balancedClose(s, mm.end - 1)
-            close > 0 && s.substring(close + 1).matches("""(?is)\s*WITH\s+ORDINALITY\b.*""")
-          }
-        }.foreach { mm =>
-          val close = balancedClose(s, mm.end - 1)
-          val e = s.substring(mm.end, close)
-          val tail = s.substring(close + 1)
-          val aliasRe =
-            """(?is)^\s*WITH\s+ORDINALITY\s+(?:AS\s+)?(\w+)\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)""".r
-          aliasRe.findFirstMatchIn(tail) match {
-            case Some(am) =>
-              s = s.substring(0, mm.start) +
-                s"(SELECT col AS ${am.group(2)}, pos + 1 AS ${am.group(3)} " +
-                s"FROM posexplode($e)) AS ${am.group(1)}" +
-                tail.substring(am.end)
-              progress = true
-            case None => throw new IllegalArgumentException(
-              "unnest(...) WITH ORDINALITY requires an alias with a column " +
-                "list: AS t(value, ordinality)")
-          }
-        }
-      }
-    }
-    s = rewriteCalls(s, "unnest")(args => Some(s"explode(${args.mkString(", ")})"))
-    s = rewriteCalls(s, "string_to_array") {
+  private val rewritePgFunctions: Pass = chain(
+    rewriteUnnestOrdinality,
+    rewriteCalls("unnest")(args => Some(s"explode(${args.mkString(", ")})")),
+    rewriteCalls("string_to_array") {
       case Seq(x, d) if isStringLiteral(d) => Some(s"split($x, ${literalAsRegex(d)}, -1)")
       case args => throw new IllegalArgumentException(
         s"string_to_array supports (expr, 'literal-delimiter') only, got ${args.size} arg(s)")
-    }
-    s = rewriteCalls(s, "string_to_table") {
+    },
+    rewriteCalls("string_to_table") {
       case Seq(x, d) if isStringLiteral(d) =>
         Some(s"explode(split($x, ${literalAsRegex(d)}, -1))")
       case args => throw new IllegalArgumentException(
         s"string_to_table supports (expr, 'literal-delimiter') only, got ${args.size} arg(s)")
-    }
-    s = rewriteCalls(s, "regexp_split_to_array") {
+    },
+    rewriteCalls("regexp_split_to_array") {
       case Seq(x, p) => Some(s"split($x, $p, -1)")
       case args => throw new IllegalArgumentException(
         s"regexp_split_to_array takes (expr, pattern), got ${args.size} arg(s)")
-    }
-    s = rewriteCalls(s, "regexp_split_to_table") {
+    },
+    rewriteCalls("regexp_split_to_table") {
       case Seq(x, p) => Some(s"explode(split($x, $p, -1))")
       case args => throw new IllegalArgumentException(
         s"regexp_split_to_table takes (expr, pattern), got ${args.size} arg(s)")
-    }
-    s = rewriteCalls(s, "strpos") {
+    },
+    rewriteCalls("strpos") {
       case Seq(a, b) => Some(s"instr($a, $b)")
       case args => throw new IllegalArgumentException(
         s"strpos takes (string, substring), got ${args.size} arg(s)")
-    }
+    },
     // substring(x FROM 'regex') — single arg after top-split (FROM is not
     // a comma); numeric FROM/FOR and comma forms pass through untouched
-    s = rewriteCalls(s, "substring") {
+    rewriteCalls("substring") {
       case Seq(one) =>
         val m = """(?is)^(.*\S)\s+FROM\s+('(?:[^']|'')*')$""".r.findFirstMatchIn(one)
         m.flatMap { mm =>
@@ -816,39 +583,24 @@ object PgRewrite {
           Some(s"regexp_extract(${mm.group(1)}, $pat, ${if (hasGroup) 1 else 0})")
         }
       case _ => None
-    }
-    s = rewriteCalls(s, "to_char") {
+    },
+    rewriteCalls("to_char") {
       case Seq(e, f) if isStringLiteral(f) &&
         """(?i)(YYYY|YY|HH24|HH12|MI|SS|DD|AM|PM)""".r
           .findFirstIn(f.drop(1).dropRight(1)).isDefined =>
         Some(s"date_format($e, '${translatePgDateFormat(f.drop(1).dropRight(1))}')")
       case _ => None // numeric masks: Spark-native to_char
-    }
-    // extract(epoch FROM e): Spark's EXTRACT lacks the epoch field
-    val epochRe = """(?i)\bextract\s*\(\s*epoch\s+from\b""".r
-    var progress = true
-    while (progress) {
-      progress = false
-      val spans = literalSpans(s)
-      epochRe.findAllMatchIn(s).find(mm => !inLiteral(spans, mm.start)).foreach { mm =>
-        val open = s.indexOf('(', mm.start)
-        val close = balancedClose(s, open)
-        if (close < 0) throw new IllegalArgumentException(
-          s"unbalanced parens in extract(epoch FROM …): $s")
-        val inner = s.substring(mm.end, close).trim
-        s = s.substring(0, mm.start) +
-          s"(CAST(unix_micros(CAST(($inner) AS TIMESTAMP)) AS DOUBLE) / 1000000)" +
-          s.substring(close + 1)
-        progress = true
-      }
-    }
-    s = rewriteCalls(s, "date_part") {
+    },
+    rewriteExtractEpoch,
+    rewriteCalls("date_part") {
       case Seq(f, e) if f.equalsIgnoreCase("'epoch'") =>
         Some(s"(CAST(unix_micros(CAST(($e) AS TIMESTAMP)) AS DOUBLE) / 1000000)")
       case _ => None // every other field is Spark-native date_part
-    }
-    s
-  }
+    })
+
+  private val windowFilter = """(?i)\bFILTER\s*\(\s*WHERE\b""".r
+  private val overKw = """(?is)\s*OVER\b""".r
+  private val whereKw = """(?is)\s*WHERE\b""".r
 
   /** PG `agg(args) FILTER (WHERE cond) OVER …` → the CASE-inside-the-
     * aggregate equivalent: Spark supports FILTER on plain aggregates but
@@ -859,55 +611,29 @@ object PgRewrite {
     * aggregate form stays on Spark's native (codegen'd) path. (Edge: an
     * array_agg of NULL values on filter-matching rows would drop them —
     * Spark's collect_list skips NULLs; documented divergence.) */
-  private def rewriteWindowFilter(sql: String): String = {
+  private def rewriteWindowFilter(lx: SqlLexer): String = {
+    val sql = lx.sql
     if (!sql.toUpperCase.contains("FILTER")) return sql
-    val re = """(?i)\bFILTER\s*\(\s*WHERE\b""".r
-    var out = sql
-    var progress = true
-    while (progress) {
-      progress = false
-      val spans = literalSpans(out)
-      re.findAllMatchIn(out).find { mm =>
-        if (inLiteral(spans, mm.start)) false
-        else {
-          val filterClose = balancedClose(out, out.indexOf('(', mm.start))
-          filterClose > 0 &&
-            out.substring(filterClose + 1).matches("""(?is)\s*OVER\b.*""")
-        }
-      }.foreach { mm =>
-        val filterOpen = out.indexOf('(', mm.start)
-        val filterClose = balancedClose(out, filterOpen)
-        val whereEnd = {
-          val wm = """(?is)^\s*WHERE\b""".r
-            .findFirstMatchIn(out.substring(filterOpen + 1)).get
-          filterOpen + 1 + wm.end
-        }
-        val cond = out.substring(whereEnd, filterClose).trim
+    def go(lo: Int, hi: Int): String = lx.rewrite(windowFilter, lo, hi) { mm =>
+      val filterOpen = sql.indexOf('(', mm.start)
+      val filterClose = lx.balancedClose(filterOpen)
+      if (filterClose < 0 || lookingAt(overKw, sql, filterClose + 1, hi).isEmpty) None
+      else {
+        val whereEnd = lookingAt(whereKw, sql, filterOpen + 1, filterClose).get.end
         // backward: the aggregate call ends at the ')' just before FILTER
         var k = mm.start - 1
-        while (k >= 0 && out.charAt(k).isWhitespace) k -= 1
-        require(k >= 0 && out.charAt(k) == ')',
-          s"FILTER must follow an aggregate call: ${out.substring(0, mm.start)}")
-        var depth = 0; var j = k; var open = -1
-        while (j >= 0 && open < 0) {
-          val span = spans.find { case (a, b) => j >= a && j < b }
-          if (span.isDefined) j = span.get._1 - 1
-          else {
-            out.charAt(j) match {
-              case ')' => depth += 1
-              case '(' => depth -= 1; if (depth == 0) open = j
-              case _ =>
-            }
-            if (open < 0) j -= 1
-          }
-        }
-        require(open > 0, s"unbalanced aggregate call before FILTER: $out")
+        while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
+        require(k >= 0 && sql.charAt(k) == ')',
+          s"FILTER must follow an aggregate call: ${sql.substring(0, mm.start)}")
+        val open = lx.balancedOpen(k)
+        require(open > 0, s"unbalanced aggregate call before FILTER: $sql")
         var f = open - 1
-        while (f >= 0 && (out.charAt(f).isLetterOrDigit || out.charAt(f) == '_')) f -= 1
-        val fn = out.substring(f + 1, open)
-        require(fn.nonEmpty, s"FILTER must follow a function call: $out")
-        val args = topSplitArgs(out.substring(open + 1, k))
-        val first = args.head
+        while (f >= 0 && (sql.charAt(f).isLetterOrDigit || sql.charAt(f) == '_')) f -= 1
+        val fn = sql.substring(f + 1, open)
+        require(fn.nonEmpty, s"FILTER must follow a function call: $sql")
+        val args = lx.splitRanges(',', open + 1, k).map { case (a, b) => go(a, b).trim }
+        val cond = go(whereEnd, filterClose).trim
+        val first = args.headOption.getOrElse("")
         val distinctRe = """(?is)^DISTINCT\s+(.*)$""".r
         val newFirst =
           if (fn.equalsIgnoreCase("count") && first == "*")
@@ -916,12 +642,10 @@ object PgRewrite {
             case Some(dm) => s"DISTINCT CASE WHEN $cond THEN ${dm.group(1)} END"
             case None => s"CASE WHEN $cond THEN $first END"
           }
-        val newCall = s"$fn(${(newFirst +: args.tail).mkString(", ")})"
-        out = out.substring(0, f + 1) + newCall + out.substring(filterClose + 1)
-        progress = true
+        Some((f + 1, filterClose + 1, s"$fn(${(newFirst +: args.drop(1)).mkString(", ")})"))
       }
     }
-    out
+    go(0, sql.length)
   }
 
   /** PG row-locking clauses — `FOR UPDATE | NO KEY UPDATE | SHARE |
@@ -934,162 +658,90 @@ object PgRewrite {
     * contended rows) would silently change results, so it is accepted
     * as a no-op too — under a single writer no row is ever locked,
     * which makes skip-nothing exactly correct. */
-  private def rewriteLockingClause(sql: String): String = {
-    if (!sql.toUpperCase.contains("FOR")) return sql
+  private def rewriteLockingClause(lx: SqlLexer): String = {
+    if (!lx.sql.toUpperCase.contains("FOR")) return lx.sql
     val re = ("""(?i)\bFOR\s+(?:UPDATE|NO\s+KEY\s+UPDATE|SHARE|KEY\s+SHARE)""" +
       """(?:\s+OF\s+[\w"]+(?:\s*,\s*[\w"]+)*)?(?:\s+NOWAIT|\s+SKIP\s+LOCKED)?""").r
-    val spans = literalSpans(sql)
-    re.replaceSomeIn(sql, m => {
-      if (inLiteral(spans, m.start)) None
-      else {
-        var d = 0; var i = 0
-        while (i < m.start) {
-          if (!inLiteral(spans, i)) {
-            val c = sql.charAt(i)
-            if (c == '(') d += 1 else if (c == ')') d -= 1
-          }
-          i += 1
-        }
-        if (d == 0) Some("") else None
-      }
-    })
+    lx.rewrite(re)(m => if (lx.depth(m.start) == 0) Some((m.start, m.end, "")) else None)
   }
 
   /** PG double-quoted identifiers → Spark backticks: `"returning"` →
     * `` `returning` ``. Without this, qualified `a."kw"` is a Spark
     * PARSE_SYNTAX_ERROR and a bare `"kw"` parses as a STRING LITERAL in
     * Spark's default mode — a silent wrong answer, the worst failure
-    * shape. Character scan, not regex: a `"` inside a single-quoted
-    * literal ('' escape honored) is content; `""` inside a quoted
+    * shape. Only the lexer's `"…"` spans convert (a `"` inside a literal,
+    * a backtick identifier or a comment is content); `""` inside the
     * identifier is PG's escape for one `"`; a backtick inside the
     * identifier body is escaped by doubling (Spark's rule). */
-  private def rewriteQuotedIdents(sql: String): String = {
+  private def rewriteQuotedIdents(lx: SqlLexer): String = {
+    val sql = lx.sql
     if (sql.indexOf('"') < 0) return sql
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { // copy the whole single-quoted literal verbatim
-        out += c; i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          out += sql.charAt(i)
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') { out += '\''; i += 2 }
-            else { done = true; i += 1 }
-          } else i += 1
-        }
-      } else if (c == '"') {
-        val body = new StringBuilder
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          if (sql.charAt(i) == '"') {
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '"') { body += '"'; i += 2 }
-            else { done = true; i += 1 }
-          } else { body += sql.charAt(i); i += 1 }
-        }
-        out += '`'
-        out ++= body.toString.replace("`", "``")
-        out += '`'
-      } else { out += c; i += 1 }
+    val out = new java.lang.StringBuilder(sql.length)
+    var changed = false
+    lx.foreachSegment() { (kind, a, b) =>
+      if (kind == SqlLexer.Ident) {
+        out.append('`').append(lx.unquote(a, b).replace("`", "``")).append('`')
+        changed = true
+      } else out.append(sql, a, b)
     }
-    out.toString
+    if (changed) out.toString else sql
   }
 
-  def rewrite(sql: String): String = {
-    def gated(re: scala.util.matching.Regex, s: String, opPos: scala.util.matching.Regex.Match => Int,
-        repl: scala.util.matching.Regex.Match => String): String = {
-      val spans = literalSpans(s)
-      re.replaceSomeIn(s, m =>
-        if (inLiteral(spans, opPos(m))) None
-        else Some(java.util.regex.Matcher.quoteReplacement(repl(m))))
-    }
-    var s = gated(path, rewriteQuotedIdents(sql), _.end(1),
-      m => s"get_json_object(${m.group(1)}, '$$.${m.group(2).split(",").map(_.trim).mkString(".")}')")
-    var changed = true
-    while (changed) {
-      val before = s
-      s = gated(keyOnGjo, s, _.end(2),
-        m => s"get_json_object(${m.group(1)}, '${m.group(2)}.${m.group(4)}')")
-      s = gated(idxOnGjo, s, _.end(2),
-        m => s"get_json_object(${m.group(1)}, '${m.group(2)}[${m.group(4)}]')")
-      s = gated(keyOnIdent, s, _.end(1),
-        m => s"get_json_object(${m.group(1)}, '$$.${m.group(3)}')")
-      s = gated(idxOnIdent, s, _.end(1),
-        m => s"get_json_object(${m.group(1)}, '$$[${m.group(3)}]')")
-      changed = s != before
-    }
+  private val passes: Pass = chain(
+    rewriteQuotedIdents,
+    gated(path, _.end(1))(m =>
+      s"get_json_object(${m.group(1)}, '$$.${m.group(2).split(",").map(_.trim).mkString(".")}')"),
+    lx => { // chained -> / ->> operators fold left to right until fixpoint;
+      // on get_json_object the gate is the `->` itself
+      val step = chain(
+        gated(keyOnGjo, _.start(3) - 2)(m => s"get_json_object(${m.group(1)}, '${m.group(2)}.${m.group(4)}')"),
+        gated(idxOnGjo, _.start(3) - 2)(m => s"get_json_object(${m.group(1)}, '${m.group(2)}[${m.group(4)}]')"),
+        gated(keyOnIdent, _.end(1))(m => s"get_json_object(${m.group(1)}, '$$.${m.group(3)}')"),
+        gated(idxOnIdent, _.end(1))(m => s"get_json_object(${m.group(1)}, '$$[${m.group(3)}]')"))
+      var cur = lx
+      var next = relex(cur, step(cur))
+      while (!(next eq cur)) { cur = next; next = relex(cur, step(cur)) }
+      cur.sql
+    },
     // PG regex-match operators: `~` / `~*` / `!~` / `!~*` → RLIKE (the
     // case-insensitive forms inject an inline (?i) flag). Only literal
     // patterns rewrite — a computed pattern stays untouched.
-    s = gated(regexOp, s, _.start(3) - 1, m => {
+    gated(regexOp, _.start(3) - 1) { m =>
       val lhs = m.group(1); val neg = m.group(2) == "!"; val ci = m.group(3) == "*"
       val pat = if (ci) "'(?i)" + m.group(4).drop(1) else m.group(4)
       val e = s"$lhs RLIKE $pat"
       if (neg) s"NOT ($e)" else e
-    })
-    s = rewriteCasts(s)
-    s = rewriteAggOrderBy(s)
-    s = rewriteFetchFirst(s)
-    s = rewriteTableSample(s)
-    s = rewriteGenerateSeries(s)
-    s = rewritePgFunctions(s)
-    s = rewriteWindowFilter(s)
-    s = rewriteLockingClause(s)
-    s = rewriteArrayLiteral(s)
-    s = rewriteAnyAll(s)
-    s = rewriteSimilarTo(s)
-    s = rewriteDistinctOn(s)
+    },
+    rewriteCasts,
+    rewriteAggOrderBy,
+    rewriteFetchFirst,
+    rewriteTableSample,
+    rewriteGenerateSeries,
+    rewritePgFunctions,
+    rewriteWindowFilter,
+    rewriteLockingClause,
+    rewriteArrayLiteral,
+    rewriteAnyAll,
+    rewriteSimilarTo,
+    rewriteDistinctOn,
     // PG system functions the reference serves at protocol level
     // (postgres/PostgresConnectionHandler.java:202-213,296-371)
-    s = s.replaceAll("(?i)\\bVERSION\\s*\\(\\)", "'graft (Spark " +
-      org.apache.spark.SPARK_VERSION + ")'")
-    s = s.replaceAll("(?i)\\bCURRENT_DATABASE\\s*\\(\\)", "current_database()")
-    s
-  }
+    gated("""(?i)\bVERSION\s*\(\)""".r)(_ => s"'graft (Spark ${org.apache.spark.SPARK_VERSION})'"),
+    gated("""(?i)\bCURRENT_DATABASE\s*\(\)""".r)(_ => "current_database()"))
+
+  def rewrite(sql: String): String = passes(new SqlLexer(sql))
 
   /** Fold `current_database()` to a string LITERAL of the calling
     * context's database. Spark's builtin resolves at optimization time
     * from the session-GLOBAL catalog — under per-connection database
     * binding a sibling context's USE re-sync can land between a
     * statement's analysis and its first action, so the builtin would
-    * answer the wrong database. String literals are opaque (a
-    * "current_database()" inside text is content, same discipline as
-    * the placeholder substitution paths). */
+    * answer the wrong database. Only code calls fold (a
+    * "current_database()" inside text is content). */
   def bindCurrentDatabase(sql: String, db: String): String = {
     if (!sql.toLowerCase.contains("current_database")) return sql
-    val pat = java.util.regex.Pattern.compile(
-      "(?i)\\bCURRENT_DATABASE\\s*\\(\\s*\\)")
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { // copy string literal verbatim ('' escape)
-        out += c; i += 1
-        var closed = false
-        while (i < sql.length && !closed) {
-          out += sql.charAt(i)
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-              out += '\''; i += 2
-            } else { closed = true; i += 1 }
-          } else i += 1
-        }
-      } else {
-        // cheap prefix probe BEFORE any regex work — a matcher.find per
-        // character would make this rewrite quadratic on long statements
-        if ((c == 'c' || c == 'C') &&
-            sql.regionMatches(true, i, "current_database", 0, 16)) {
-          val m = pat.matcher(sql)
-          if (m.find(i) && m.start == i) {
-            out ++= "'" + db.replace("'", "''") + "'"
-            i = m.end
-          } else { out += c; i += 1 }
-        } else { out += c; i += 1 }
-      }
-    }
-    out.toString
+    gated("""(?i)\bCURRENT_DATABASE\s*\(\s*\)""".r)(_ =>
+      "'" + db.replace("'", "''") + "'")(new SqlLexer(sql))
   }
 }
 

@@ -99,6 +99,36 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("PgRewrite keeps a quote inside a backtick identifier out of literal tracking") {
+    // the ' in `it's` is identifier content, so "b" after it is still a
+    // double-quoted identifier (left as "b", Spark reads the string 'b')
+    assert(PgRewrite.rewrite("SELECT `it's` AS a, \"b\" FROM t") == "SELECT `it's` AS a, `b` FROM t")
+  }
+
+  test("StatementSplitter does not split inside a backtick identifier") {
+    assert(StatementSplitter.split("SELECT `a;b` FROM t; SELECT 2") == Seq("SELECT `a;b` FROM t", "SELECT 2"))
+  }
+
+  test("PgRewrite finds string_agg's ORDER BY past a quoted paren") {
+    assert(PgRewrite.rewrite("SELECT string_agg(x, ')' ORDER BY y) FROM t") ==
+      "SELECT string_agg(x, ')') WITHIN GROUP (ORDER BY y) FROM t")
+  }
+
+  test("PgRewrite rewrites a 4000-row VALUES list of casts and ARRAY constructors in linear time") {
+    def values(rows: Int) = (0 until rows).map { i =>
+      s"($i, 'name$i'::text, '2024-01-${10 + i % 18}'::date, ARRAY[1, 2])"
+    }.mkString("SELECT * FROM VALUES ", ", ", "")
+    PgRewrite.rewrite(values(500)) // JIT warm-up
+    val sql = values(4000)
+    val t0 = System.nanoTime()
+    val out = PgRewrite.rewrite(sql)
+    val secs = (System.nanoTime() - t0) / 1e9
+    val lastRow = out.endsWith("(3999, CAST('name3999' AS text), CAST('2024-01-13' AS date), array(1, 2))")
+    val counts = ("CAST\\(".r.findAllMatchIn(out).size, "array\\(".r.findAllMatchIn(out).size)
+    assert(lastRow && counts == ((8000, 4000)), s"casts/arrays rewritten: $counts")
+    assert(secs < 1.0, f"rewrite of ${sql.length} chars took $secs%.2f s")
+  }
+
   test("µ-quantized dot matches exact-expansion HALF_UP at scale 6") {
     // the invariant DotExactExpr's r14 lockstep contract rests on: the
     // floor(x+0.5) fast path computes, for EVERY float element, the same

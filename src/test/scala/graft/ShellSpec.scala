@@ -53,4 +53,15 @@ class ShellSpec extends SparkSpec {
     gs.sql(s"\\copy ct TO '$dir/ct2.csv' WITH (FORMAT CSV, HEADER)")
     assert(Files.list(java.nio.file.Paths.get(s"$dir/ct2.csv")).count() > 0)
   }
+
+  test("\\copy (query) keeps a quoted paren inside the query") {
+    val gs = new GraftSession(spark, Files.createTempDirectory("graft_shell_copy_paren"))
+    val dir = Files.createTempDirectory("graft_shell_copy_paren_io")
+    gs.sql("CREATE TABLE ct (id INT PRIMARY KEY, name TEXT)")
+    gs.sql("INSERT INTO ct VALUES (1, 'ada')")
+    gs.sql(s"\\copy (SELECT ')' AS p FROM ct) TO $dir/paren.csv WITH (FORMAT CSV)")
+    gs.sql("CREATE TABLE cp (p TEXT)")
+    gs.sql(s"\\copy cp FROM $dir/paren.csv WITH (FORMAT CSV)")
+    assert(gs.sql("SELECT p FROM cp").collect().map(_.getString(0)).toSeq == Seq(")"))
+  }
 }
